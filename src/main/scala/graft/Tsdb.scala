@@ -35,8 +35,9 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   // graft.plans.SimplifyFoldedLabelLookup) rides the session's
   // experimental optimizer hook so it is active in ANY session that
   // touches a Tsdb — no session-builder cooperation (extensions config)
-  // required; idempotent across instances
-  locally {
+  // required; idempotent across instances, and atomic per session, so
+  // Tsdbs built concurrently on one session register it exactly once
+  spark.synchronized {
     val rule = graft.plans.SimplifyFoldedLabelLookup
     val cur = spark.experimental.extraOptimizations
     if (!cur.contains(rule))
@@ -255,7 +256,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     // over the batch: the boundary is a monotone max, so the global
     // listing equals max(old, thisBatch) exactly — and it shaves one
     // job launch per streaming commit (~0.2-0.4 s at micro-batch
-    // cadence, measured in IngestBench's file-stream path).
+    // cadence, measured on the file-stream ingest path in round 9).
     listSegDirs().map(_._1).maxOption.foreach { s =>
       frozenInit = true // this listing IS the lazy init's listing
       frozenMaxSeg = math.max(frozenMaxSeg, s)

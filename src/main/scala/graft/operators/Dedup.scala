@@ -3,6 +3,7 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.functions.TextFunctions._
 import graft.functions.VectorFunctions._
@@ -440,11 +441,23 @@ object Dedup {
   def connectedComponents(pairs: DataFrame): DataFrame =
     connectedComponentsRounds(pairs)._1
 
+  /** Both components loops read the pair ids straight off the internal
+    * rows with `getLong`, which would misread any other type rather than
+    * convert it.
+    */
+  private def requireLongIds(pairs: DataFrame): Unit =
+    Seq("id1", "id2").foreach { c =>
+      val t = pairs.schema(c).dataType
+      require(t == LongType,
+        s"connected components need LongType pair ids: column $c is ${t.simpleString}")
+    }
+
   /** [[connectedComponents]] plus its round count — exposed for the
     * round-complexity spec comparing the two algorithms.
     */
   private[graft] def connectedComponentsRounds(
       pairs: DataFrame): (DataFrame, Int) = {
+    requireLongIds(pairs)
     val spark = pairs.sparkSession
     val edges = pairs.select(col("id1").as("a"), col("id2").as("b"))
       .union(pairs.select(col("id2").as("a"), col("id1").as("b")))
@@ -515,6 +528,7 @@ object Dedup {
 
   private[graft] def connectedComponentsStarRounds(
       pairs: DataFrame): (DataFrame, Int) = {
+    requireLongIds(pairs)
     val spark = pairs.sparkSession
     // per-round materialize + convergence stat in ONE job (see
     // connectedComponentsRounds): the (edge count, Σ(u+v)) Kiveris

@@ -643,7 +643,7 @@ object Similarity {
     * the query. Approximate: recall < 1 by design; verified against
     * [[bruteForceTopK]] in tests.
     *
-    * Defaults tuned with `graft.tools.AnnTune` (recall@5 vs brute force on
+    * Defaults tuned in round 1 by a recall sweep (recall@5 vs brute force on
     * the sf0.01 embeddings): planes=16/bands=8 → 0.96; the previous
     * 4-band default measured 0.36. IVF at cells=16/probe=4 → 0.70,
     * probe=8 → 0.92 (at the cost of scanning half the cells).
@@ -653,7 +653,8 @@ object Similarity {
     * setting admits ~89% of pairs as candidates — no sublinear index can
     * be simultaneously selective and high-recall on data with no cluster
     * structure. On real embedding corpora (which cluster), the same
-    * banding is selective at high recall; tune per-corpus with AnnTune.
+    * banding is selective at high recall; tune per corpus against
+    * [[bruteForceTopK]] recall.
     */
   /** The plane family of [[lshSignatures]] (xxhash64(j, i) parity),
     * pre-evaluated on the driver so plane vectors can be emitted as
@@ -684,7 +685,8 @@ object Similarity {
     *     probes per band per query, so probe fan-out scales with the tiny
     *     query set, never the corpus.
     *
-    * Measured on the near-isotropic test corpus (AnnTune, sf0.01):
+    * Measured on the near-isotropic test corpus (round-2 recall sweep,
+    * sf0.01):
     * candidate admission 0.67 at recall@5 = 0.94 with the registered
     * 24-plane/4-band/probe-4 setting — vs 0.89 admission at 0.96 recall
     * for [[lshTopK]]. Isotropic data bounds how selective ANY sublinear
@@ -865,7 +867,8 @@ object Similarity {
   }
 
   /** Candidate pairs only (pre-rerank) of [[multiprobeTopK]] — exposed for
-    * selectivity measurement (AnnTune's candidate-fraction column).
+    * selectivity measurement (the candidate fraction that OperatorSpec's
+    * admission gates check).
     */
   def multiprobeCandidates(
       emb: DataFrame,

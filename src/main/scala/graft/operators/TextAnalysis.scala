@@ -631,10 +631,10 @@ object TextAnalysis {
       docs: DataFrame,
       textCol: String,
       numMerges: Int): Seq[(String, String)] = {
-    graft.functions.Bpe.train(bpeCensusForProfile(docs, textCol), numMerges)
+    graft.functions.Bpe.train(bpeCensus(docs, textCol), numMerges)
   }
 
-  /** The word census behind [[bpeTrain]], exposed for stage profiling.
+  /** The word census behind [[bpeTrain]].
     * The driver-side collect is bounded: a web-scale corpus's distinct-
     * word census is NOT vocabulary-sized (typos, hashes, URLs grow it
     * with the corpus), so the census keeps only the
@@ -645,7 +645,7 @@ object TextAnalysis {
     * 100 TB corpus can no longer OOM the driver; singleton tail words
     * cannot win a merge round against the head anyway.
     */
-  private[graft] def bpeCensusForProfile(
+  private def bpeCensus(
       docs: DataFrame, textCol: String): Seq[(String, Long)] = {
     val maxWords = docs.sparkSession.conf
       .get("spark.graft.bpe.censusMaxWords", "4000000").toInt

@@ -1,28 +1,21 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
+import graft.{GraftSession, SparkEntry}
 
-/** Dev-only: run one registered query by name against a sf dir, printing
-  * the real exception (Bench swallows errors to -1). Not part of the API.
+/** Dev-only: run one registered query by name against a sf dir, timing it
+  * and letting its real exception surface. Not part of the API.
+  *
+  * Usage: runMain graft.tools.RunQuery <name> [sfDir=sf0.001]
   */
 object RunQuery {
   def main(args: Array[String]): Unit = {
     val name = args(0)
     val dir = args.lift(1).getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .getOrCreate()
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors)
     spark.sparkContext.setLogLevel("WARN")
-    graft.SparkEntry.prewarm(spark, dir,
-      Some(Set(name)))
+    SparkEntry.prewarm(spark, dir, Set(name))
     val t0 = System.nanoTime()
-    val n = graft.SparkEntry.queries(name)(spark, dir).count()
+    val n = SparkEntry.queries(name)(spark, dir).count()
     println(f"$name: $n rows in ${(System.nanoTime() - t0) / 1e9}%.2f s")
     spark.stop()
   }

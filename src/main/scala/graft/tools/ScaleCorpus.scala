@@ -1,7 +1,9 @@
 package graft.tools
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
+
+import graft.GraftSession
 
 /** Materialize an FK-consistent N× replication of a shared testdata dir so
   * the FULL registered query set can run at a scale point where shuffles
@@ -31,7 +33,7 @@ import org.apache.spark.sql.functions._
   *     without an output explosion.
   *
   * Output layout mirrors `/root/testdata/sf*` (`<out>/<name>.parquet`), so
-  * `Bench`/`SparkEntry.queries` run unchanged via `SPARK_GRAFT_SF_DIR`.
+  * `SparkEntry.queries` (and `Verify`, `RunQuery`) run unchanged on it.
   * Deterministic (pure hash math, no RNG); written once, gitignored.
   *
   * Usage: runMain graft.tools.ScaleCorpus [factor=10] [srcDir=sf0.1]
@@ -51,15 +53,9 @@ object ScaleCorpus {
     val tag = new java.io.File(src).getName
     val out = s"spark-warehouse/graft_scale/${tag}_x$factor"
 
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "64")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = GraftSession.local(Runtime.getRuntime.availableProcessors)
+    // a fixed shuffle width, whatever the host's core count
+    spark.conf.set("spark.sql.shuffle.partitions", "64")
     spark.sparkContext.setLogLevel("WARN")
 
     def read(name: String) = spark.read.parquet(s"$src/$name.parquet")

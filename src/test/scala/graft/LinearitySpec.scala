@@ -10,7 +10,7 @@ import org.apache.spark.sql.functions._
   * invisible to every other spec — but catastrophic on real 10-100 KB
   * documents (pre-fix receipts: polyFingerprint grew 227× for 20×
   * length; dsirGrams made pipeline_dsir 134.5 s at x100). This spec is
-  * tools/LongDocProbe shrunk to a test budget: two equal-row corpora
+  * the long-document probe shrunk to a test budget: two equal-row corpora
   * 16× apart in tokens per doc, asserting wall-time growth stays far
   * below the quadratic signature (16× linear → gate at 80×; the
   * quadratic class reads ≥ 200×).
@@ -31,7 +31,7 @@ class LinearitySpec extends SparkSuite {
       .localCheckpoint() // materialize: text generation outside timing
 
   // force EVERY output column — a bare count() lets the optimizer prune
-  // the computed columns away entirely (the first LongDocProbe version
+  // the computed columns away entirely (the first long-document probe
   // measured nothing but row counting for the map-side operators)
   private def force(df: DataFrame): Unit = {
     df.select(max(xxhash64(df.columns.map(col): _*))).head(); ()
@@ -87,7 +87,6 @@ class LinearitySpec extends SparkSuite {
     for ((name, g) <- growth)
       assert(g <= 80.0,
         f"$name grew ${g}%.1fx for ${factor}x document length — " +
-        "a recompute/quadratic term is back (see SURVEY §8.10 and " +
-        "tools/LongDocProbe)")
+        "a recompute/quadratic term is back (see SURVEY §8.10)")
   }
 }

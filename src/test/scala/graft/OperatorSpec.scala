@@ -140,6 +140,17 @@ class OperatorSpec extends SparkSuite {
     assert(starRounds <= 7, s"star rounds = $starRounds")
   }
 
+  test("both components loops reject non-Long pair ids, naming the column") {
+    import spark.implicits._
+    val intPairs = Seq((1, 2), (2, 3)).toDF("id1", "id2")
+    for (run <- Seq[org.apache.spark.sql.DataFrame => Any](
+        Dedup.connectedComponentsRounds, Dedup.connectedComponentsStarRounds)) {
+      val e = intercept[IllegalArgumentException](run(intPairs))
+      assert(e.getMessage.contains("id1") && e.getMessage.contains("int"),
+        e.getMessage)
+    }
+  }
+
   test("simhash near-dups are a subset-consistent view of true near-dups") {
     val sim = Dedup.simHashPairs(docs, "doc_id", "text", maxHamming = 3)
       .select("id1", "id2").collect()

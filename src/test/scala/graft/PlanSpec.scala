@@ -10,7 +10,7 @@ import graft.sources.Tables
   * properties (partition pruning, predicate pushdown, broadcast vs
   * shuffle choices, map-side native expressions, bounded shuffle counts)
   * are asserted here so a refactor that silently loses one fails CI —
-  * the executable form of what `graft.tools.ExplainAudit` prints.
+  * an explain audit that runs on every build instead of by hand.
   */
 class PlanSpec extends SparkSuite {
 

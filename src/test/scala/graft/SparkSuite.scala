@@ -5,15 +5,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared session for ScalaTest suites: one local session per suite. */
 trait SparkSuite extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .appName(getClass.getSimpleName)
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.ui.enabled", "false")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.sql.mapKeyDedupPolicy", "LAST_WIN")
-    .getOrCreate()
+  lazy val spark: SparkSession = GraftSession.local(4)
 
   def sf0001 = "/root/testdata/sf0.001"
 

@@ -826,4 +826,26 @@ class TsdbSpec extends SparkSuite {
       .agg(max("nf")).head().getLong(0)
     assert(maxFilesPerSid == 1L)
   }
+
+  test("Tsdbs built concurrently on one session register the lookup rule once") {
+    val session = spark.newSession()
+    val pool = java.util.concurrent.Executors.newFixedThreadPool(8)
+    val go = new java.util.concurrent.CountDownLatch(1)
+    try {
+      val built = (0 until 8).map { _ =>
+        pool.submit(new java.util.concurrent.Callable[Tsdb] {
+          def call(): Tsdb = {
+            go.await()
+            new Tsdb(session, TsdbConf(dataPath = tempDir("tsdb_race"),
+              onlyMemoryMode = true))
+          }
+        })
+      }
+      go.countDown()
+      built.foreach(_.get())
+    } finally pool.shutdown()
+    val rules = session.experimental.extraOptimizations
+    assert(rules.count(_ == graft.plans.SimplifyFoldedLabelLookup) == 1,
+      rules.mkString(", "))
+  }
 }
