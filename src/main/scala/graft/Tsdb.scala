@@ -62,7 +62,13 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
   private val metaBasePath = s"${conf.dataPath}/series_meta_base"
 
   /** Folded delta level (L1): one merged generation appended per inline
-    * fold. Bounded by churn volume since the last full compaction. */
+    * fold, holding one row per sid touched since the previous fold. It
+    * is NOT bounded by churn: under a scrape-shaped feed every live
+    * series is touched in every batch, so each fold appends about one
+    * row per live series, and L1 grows with folds × live series until
+    * [[compactSeriesMeta]] runs. Once its bytes × 4 pass the broadcast
+    * threshold ([[metaDeltaSmall]]), [[seriesMeta]] falls back to the
+    * full base ∪ delta shuffle merge. */
   private val metaFoldedPath = s"${conf.dataPath}/series_meta_folded"
 
   /** Label→value-set dimension tier (the reference's `labelValueSet`,
@@ -74,6 +80,35 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * of rows instead of a 15M-row map aggregation.
     */
   private val labelValuesPath = s"${conf.dataPath}/label_values"
+
+  /** Schema of every tier path this instance has read, keyed by path. A
+    * bare `spark.read.parquet` launches one job to read a footer, and a
+    * query reads up to four tiers (the fact table and the three
+    * series-meta levels); the first read of a path infers its schema and
+    * every later read passes it. No invalidation: this `Tsdb` is the
+    * only writer of its tiers and every writer of a tier emits the same
+    * columns. Shared by the stream thread and query threads; two racing
+    * first reads both infer the same schema.
+    */
+  private val tierSchemas =
+    new java.util.concurrent.ConcurrentHashMap[
+      String, org.apache.spark.sql.types.StructType]()
+
+  /** The one way this instance reads a tier it owns (see [[tierSchemas]]). */
+  private def readTier(path: String): DataFrame =
+    Option(tierSchemas.get(path)) match {
+      case Some(schema) => spark.read.schema(schema).parquet(path)
+      case None =>
+        val df = spark.read.parquet(path)
+        tierSchemas.putIfAbsent(path, df.schema)
+        df
+    }
+
+  /** Whether [[samples]] rows carry `metric` and `labels`: the memory
+    * head always does, the durable fact only in the denormalized layout.
+    */
+  private def factHasLabels: Boolean =
+    conf.onlyMemoryMode || conf.storeLabelsInFact
 
   /** onlyMemoryMode head: accumulated in-memory batches (the reference's
     * memory segment, memory_segment.go). Batch appends only; the streaming
@@ -181,26 +216,17 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * reference's outdated-list machinery, memory_segment.go:104-111, exists
     * only because its Gorilla blocks are append-only).
     */
-  /** Spread a badly-partitioned ingest batch across the cluster before
-    * the per-row work: a single-partition feed (one kafka partition, one
-    * un-split file — exactly how the sf0.1 events parquet reads) would
-    * otherwise serialize normalize + checkpoint + write onto one core.
-    * Only engages when the input has less than half the default
-    * parallelism — well-partitioned callers pay nothing.
-    */
-  private def spread(df: DataFrame): DataFrame = {
-    val want = spark.sparkContext.defaultParallelism
-    if (df.rdd.getNumPartitions * 2 < want) df.repartition(want) else df
-  }
-
   def insertRows(df: DataFrame): Unit = {
-    // spread only on the durable path: it materializes (persist + write),
-    // so parallelizing the per-row work pays. The memory-mode head is a
+    // spread only on the durable path: a single-partition feed (one kafka
+    // partition, one un-split file) would otherwise serialize normalize +
+    // persist + write onto one core, and the write materializes, so
+    // parallelizing the per-row work pays. The memory-mode head is a
     // LAZY union serving reads — an exchange here would sit in every
     // downstream query plan (attach() feeds this path; round-7 measured
     // a uniform 1.3-2.2x slowdown across the tsdb family before this
     // guard), and the source's natural partitioning is what queries want.
-    val norm0 = normalize(if (conf.onlyMemoryMode) df else spread(df))
+    val norm0 = normalize(
+      if (conf.onlyMemoryMode) df else graft.operators.Spread(df))
     if (conf.onlyMemoryMode) {
       val u = memHead.map(_.unionByName(norm0)).getOrElse(norm0)
       memBatches += 1
@@ -322,12 +348,13 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
 
   /** Bookkeeping after every durable `series_meta` DELTA append: one more
     * partial generation on disk, size caches stale; fold the delta
-    * partials back to one generation inline once the configured cadence
-    * is reached, so metadata read cost stays O(1) in ingest-batch count.
-    * The fold never touches the consolidated base — its cost is bounded
-    * by the rows touched since the last [[compactSeriesMeta]], not by
-    * total series count (the reference's insert-time `labelValueSet`
-    * update is likewise O(batch), memory_segment.go:93-96).
+    * partials into L1 inline once the configured cadence is reached, so
+    * L0 never holds more than the cadence's generations (L1 itself grows
+    * with every fold until [[compactSeriesMeta]]; see `metaFoldedPath`).
+    * The fold never touches the base or L1 — its cost is bounded by the
+    * rows appended since the last fold, not by total series count (the
+    * reference's insert-time `labelValueSet` update is likewise
+    * O(batch), memory_segment.go:93-96).
     */
   private def metaAppended(): Unit = {
     metaGenerations += 1
@@ -348,7 +375,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     *         `enableOutdated=true`)
     */
   def insertHeadRows(df: DataFrame): Long = {
-    val norm0 = normalize(spread(df))
+    val norm0 = normalize(graft.operators.Spread(df))
     // localCheckpoint materializes the batch once: the count below and the
     // head union both read the materialized partitions, and the incoming
     // lineage (often a fresh source read) is truncated
@@ -404,7 +431,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * unaffected by the head.
     */
   def samples: DataFrame = {
-    if (conf.onlyMemoryMode) memHead.getOrElse(spark.read.parquet(samplesPath))
+    if (conf.onlyMemoryMode) memHead.getOrElse(readTier(samplesPath))
     else {
       val factCols =
         if (conf.storeLabelsInFact)
@@ -412,7 +439,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         else Seq("sid", "seg", "ts", "value")
       val disk =
         if (pathExists(samplesPath))
-          Some(spark.read.parquet(samplesPath).select(factCols.map(col): _*))
+          Some(readTier(samplesPath).select(factCols.map(col): _*))
         else None
       val head = memHead.map(_.select(factCols.map(col): _*))
       (disk, head) match {
@@ -471,7 +498,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     * denormalized layout, broadcast dimension join for the normalized one.
     */
   def samplesWithLabels: DataFrame =
-    if (samples.columns.contains("labels")) samples
+    if (factHasLabels) samples
     else samples
       .join(dimHint(seriesMeta.select("sid", "metric", "labels")), "sid")
       .select("sid", "metric", "labels", "seg", "ts", "value")
@@ -500,15 +527,15 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         min("ts").as("minTs"), max("ts").as("maxTs")))
     val base =
       if (!conf.onlyMemoryMode && pathExists(metaBasePath))
-        Some(spark.read.parquet(metaBasePath))
+        Some(readTier(metaBasePath))
       else None
     val diskL0 =
       if (!conf.onlyMemoryMode && pathExists(metaPath))
-        Some(spark.read.parquet(metaPath))
+        Some(readTier(metaPath))
       else None
     val diskL1 =
       if (!conf.onlyMemoryMode && pathExists(metaFoldedPath))
-        Some(spark.read.parquet(metaFoldedPath))
+        Some(readTier(metaFoldedPath))
       else None
     // the head aggregation is just another (already-merged) delta level
     val delta = Seq(diskL1, diskL0, headAgg).flatten
@@ -588,7 +615,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     // the fact is normalized (no labels) and the dimension is the only way
     // to evaluate matchers without a per-row reconstruction join.
     queryRange(metric, matchers, start, end,
-      useSeriesIndex = !samples.columns.contains("labels"))
+      useSeriesIndex = !factHasLabels)
 
   /** @param useSeriesIndex when true (default), matcher evaluation runs on
     * the small series_meta dimension and the matching sids semi-join the
@@ -622,7 +649,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
         .select("sid", "labels", "ts", "value")
     } else {
       val withLabels =
-        if (pruned.columns.contains("labels")) pruned
+        if (factHasLabels) pruned
         else pruned.select("sid", "ts", "value")
           .join(dimHint(seriesMeta.select("sid", "labels")), "sid")
       withLabels
@@ -646,7 +673,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     val pruned = samples
       .where(segPredicate(start, end))
       .where(col("ts").between(start, end))
-    if (!samples.columns.contains("labels")) {
+    if (!factHasLabels) {
       val matching = seriesMeta
         .where(matcherPredicate(col("labels"), matchers))
         .select("sid", "labels")
@@ -1522,7 +1549,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       s"bucket to be exact: $offsetSec")
     val start0 = start - offsetSec
     val end0 = end - offsetSec
-    val roll = spark.read.parquet(s"${conf.dataPath}/rollup_$stepSec")
+    val roll = readTier(s"${conf.dataPath}/rollup_$stepSec")
       .where(segPredicate(start0, end0))
       .where(col("bucket_start").between(start0, end0))
     val matching = seriesMeta
@@ -2623,7 +2650,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       val diskVals =
         if (conf.onlyMemoryMode) None
         else if (pathExists(labelValuesPath))
-          Some(spark.read.parquet(labelValuesPath)
+          Some(readTier(labelValuesPath)
             .where(segPredicate(start, end) && col("name") === label)
             .select("value"))
         else if (pathExists(samplesPath))
@@ -2659,7 +2686,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     val diskNames =
       if (conf.onlyMemoryMode) None
       else if (pathExists(labelValuesPath))
-        Some(spark.read.parquet(labelValuesPath)
+        Some(readTier(labelValuesPath)
           .where(segPredicate(start, end))
           .select("name"))
       else if (pathExists(samplesPath))
@@ -2702,7 +2729,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     */
   def foldMetaDelta(): Unit = {
     if (conf.onlyMemoryMode || !pathExists(metaPath)) return
-    mergedMeta(spark.read.parquet(metaPath))
+    mergedMeta(readTier(metaPath))
       .coalesce(4)
       .write.mode("append")
       .option("compression", conf.compression)
@@ -2731,7 +2758,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     val levels = Seq(metaBasePath, metaFoldedPath, metaPath)
       .filter(pathExists)
     if (levels.nonEmpty && levels != Seq(metaBasePath)) {
-      val all = levels.map(spark.read.parquet(_)).reduce(_ unionByName _)
+      val all = levels.map(readTier).reduce(_ unionByName _)
       val tmp = metaBasePath + ".compact"
       mergedMeta(all)
         .coalesce(4)
@@ -2762,7 +2789,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
     if (conf.onlyMemoryMode) return
     if (pathExists(labelValuesPath)) {
       val tmp = labelValuesPath + ".compact"
-      spark.read.parquet(labelValuesPath)
+      readTier(labelValuesPath)
         .distinct()
         .repartition(col("seg"))
         .sortWithinPartitions("name", "value")
@@ -2773,7 +2800,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       swapInPlace(new org.apache.hadoop.fs.Path(tmp),
         new org.apache.hadoop.fs.Path(labelValuesPath))
     } else if (pathExists(samplesPath)) {
-      val disk = spark.read.parquet(samplesPath)
+      val disk = readTier(samplesPath)
       val labeled =
         if (disk.columns.contains("labels")) disk.select("seg", "labels")
         else disk.select("seg", "sid").distinct()
@@ -2877,7 +2904,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
           // non-`seg=<n>` directory mid-rewrite
           val tmp = new org.apache.hadoop.fs.Path(
             s"${conf.dataPath}/.compact_seg_$seg")
-          spark.read.parquet(p.toString)
+          readTier(p.toString)
             .repartition(filesPerSeg)
             .sortWithinPartitions("sid", "ts")
             .write.mode("overwrite")
@@ -2938,7 +2965,7 @@ class Tsdb(val spark: SparkSession, val conf: TsdbConf) {
       start: Long,
       end: Long): DataFrame = {
     val all = LabelMatcher.eq(MetricLabel, metric) +: matchers
-    val chunks = spark.read.parquet(s"${conf.dataPath}/gorilla_chunks")
+    val chunks = readTier(s"${conf.dataPath}/gorilla_chunks")
       .where(segPredicate(start, end))
     val pts = graft.operators.GorillaPack
       .unpackToPoints(chunks, "sid", "block")

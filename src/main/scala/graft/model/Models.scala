@@ -95,9 +95,15 @@ final case class TsdbConf(
       * ([[graft.Tsdb.foldMetaDelta]]) into the append-only folded level
       * (L1) — the fold merges ONLY the rows appended since the last
       * fold (O(cadence × batch), independent of total series count and
-      * of store age), so metadata read cost stays O(1) in ingest-batch
-      * count and the ingest-path latency spike is bounded by the
-      * cadence, not by the dimension. The fold runs inline on the
+      * of store age), so the ingest-path latency spike is bounded by
+      * the cadence, not by the dimension. Read cost is NOT O(1) in
+      * ingest-batch count: each fold appends one row per sid touched
+      * since the last fold to L1, and under a scrape-shaped feed every
+      * live series is touched in every batch, so L1 grows with folds ×
+      * live series until [[graft.Tsdb.compactSeriesMeta]] runs; once
+      * L1 × 4 passes the broadcast threshold, metadata reads fall back
+      * from the broadcast split to the full base ∪ delta shuffle merge.
+      * The fold runs inline on the
       * append that crosses the cadence and counts toward the streaming
       * path's `writeListenerTimeoutSec` budget; latency-strict
       * streaming deployments can set `<= 0` (merge-on-read only) and

@@ -1,6 +1,9 @@
 package graft.operators
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{LimitExec, TakeOrderedAndProjectExec}
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+import org.apache.spark.sql.execution.exchange.Exchange
 
 /** Spread a badly-partitioned input across the cluster before expensive
   * per-row work (guide §2.5 "input skew": one un-split file serializes
@@ -11,12 +14,13 @@ import org.apache.spark.sql.DataFrame
   * well-partitioned inputs — at production scale (many files / row
   * groups) this is a no-op.
   *
-  * Same idiom as `Tsdb.spread` (ingest) and the former private
-  * `TextAnalysis.spreadDocs` (DSIR, r13: 10.98 → 2.15 s), promoted here
-  * because the single-partition-scan cost class turned out to cover the
-  * whole dedup/similarity/text operator surface, not just DSIR.
+  * Also spreads `Tsdb`'s durable ingest batches. First written as the
+  * private `TextAnalysis.spreadDocs` (DSIR, r13: 10.98 → 2.15 s) and
+  * promoted here because the single-partition-scan cost class turned out
+  * to cover the whole dedup/similarity/text operator surface and the
+  * ingest path, not just DSIR.
   */
-private[graft] object Spread {
+private[graft] object Spread extends AdaptiveSparkPlanHelper {
   def apply(df: DataFrame): DataFrame = {
     // streaming frames (the CorpusFilter twins reuse the batch operators):
     // no QueryExecution.toRdd before writeStream.start(), and micro-batch
@@ -28,13 +32,17 @@ private[graft] object Spread {
     // shuffle stages as real jobs whose results the subsequent repartition
     // would then discard (double execution). The single-split-input
     // problem this guard exists for is a property of scan-rooted frames
-    // only, so skipping shuffle-rooted ones loses nothing.
-    import org.apache.spark.sql.catalyst.plans.logical._
-    val exchanges = df.queryExecution.optimizedPlan.collectFirst {
-      case p @ (_: Join | _: Aggregate | _: Window | _: Sort |
-          _: RepartitionOperation) => p
+    // only, so skipping shuffle-rooted ones loses nothing. Read off the
+    // planned physical plan (planning runs no job), so every node that
+    // plans an exchange counts, not just a list of logical operators;
+    // limits gather to one partition inside the operator itself
+    // (CollectLimit/TakeOrderedAndProject show no Exchange node), so
+    // they count too
+    val shuffled = find(df.queryExecution.executedPlan) {
+      case _: Exchange | _: LimitExec | _: TakeOrderedAndProjectExec => true
+      case _ => false
     }
-    if (exchanges.isDefined) return df
+    if (shuffled.isDefined) return df
     val want = df.sparkSession.sparkContext.defaultParallelism
     // partition count from the internal-row RDD of the already-planned
     // QueryExecution — `df.rdd` would append a row-deserializing

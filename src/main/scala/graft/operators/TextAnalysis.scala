@@ -444,7 +444,7 @@ object TextAnalysis {
     * reads) the explode inherits ONE input partition and the hash loop
     * serializes onto one core. Spread the doc rows first when the input
     * is under half the default parallelism; a well-partitioned 100 TB
-    * scan pays nothing (the Tsdb.spread guard, tsdb.go has no analogue —
+    * scan pays nothing (the [[Spread]] guard, tsdb.go has no analogue —
     * this is pure Spark partitioning hygiene). Exact-integer sums are
     * partitioning-independent, so results are byte-identical.
     */

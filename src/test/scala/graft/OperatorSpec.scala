@@ -1260,6 +1260,27 @@ class OperatorSpec extends SparkSuite {
         s"simhash cap engaged at $dir - the shared oracle no longer holds")
     }
   }
+
+  test("Spread passes limit-rooted frames through untouched, launching no job") {
+    // one partition under a root limit (CollectLimit: no Exchange node),
+    // and a limit below a filter over four partitions (an Exchange to one
+    // partition, whose shuffle stage toRdd would run as a job under AQE)
+    val frames = Seq(
+      spark.range(0, 1000, 1, 1).toDF("id").limit(10),
+      spark.range(0, 1000, 1, 4).toDF("id").limit(10)
+        .where(col("id") % 2 === 0))
+    frames.foreach { f =>
+      val (out, jobs) = jobsDuring(graft.operators.Spread(f))
+      assert(jobs == 0)
+      assert(out eq f, f.queryExecution.executedPlan.toString)
+    }
+    // control: the same single-partition scan without the limit spreads,
+    // wherever there are more than two cores to spread onto (the whole
+    // suite shares the first spec's session, which may have two)
+    val scan = spark.range(0, 1000, 1, 1).toDF("id")
+    if (spark.sparkContext.defaultParallelism > 2)
+      assert(!(graft.operators.Spread(scan) eq scan))
+  }
 }
 
 /** Shared fixture call so the spec and the registered query stay in sync. */

@@ -517,11 +517,11 @@ class PlanSpec extends SparkSuite {
   }
 
   test("attach-served tsdb queries carry NO ingest-spread exchange") {
-    // Tsdb.spread (the single-partition ingest defense) must engage only
-    // on the materializing durable path: attach() feeds the lazy
-    // memory-mode head that every query plan extends, and a round-robin
-    // repartition there sat in EVERY tsdb query of the round-7 sweep
-    // (uniform 1.3-2.2x slowdown) until guarded
+    // the ingest spread (operators.Spread, the single-partition defense)
+    // must engage only on the materializing durable path: attach() feeds
+    // the lazy memory-mode head that every query plan extends, and a
+    // round-robin repartition there sat in EVERY tsdb query of the
+    // round-7 sweep (uniform 1.3-2.2x slowdown) until guarded
     val ev = graft.sources.Tables.events(spark, sf0001)
       .select(col("event_type").as("metric"),
         map(lit("user_id"), col("user_id").cast("string")).as("labels"),

@@ -12,6 +12,42 @@ trait SparkSuite extends AnyFunSuite {
   def tempDir(prefix: String): String =
     java.nio.file.Files.createTempDirectory(prefix).toString
 
+  /** `body`'s result and the Spark jobs it launches from this thread,
+    * counted by a SparkListener on a job group of their own (other
+    * threads' jobs do not count). The listener bus delivers events in
+    * order, so once a later sentinel job's start has arrived every job
+    * of `body` has been seen.
+    */
+  def jobsDuring[A](body: => A): (A, Int) = {
+    val sc = spark.sparkContext
+    val group = s"counted-${java.util.UUID.randomUUID}"
+    val sentinel = s"$group-sentinel"
+    val seen = new java.util.concurrent.atomic.AtomicInteger
+    val drained = new java.util.concurrent.CountDownLatch(1)
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        Option(e.properties).map(_.getProperty("spark.jobGroup.id")) match {
+          case Some(`group`) => seen.incrementAndGet()
+          case Some(`sentinel`) => drained.countDown()
+          case _ =>
+        }
+    }
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "counted")
+      val result =
+        try body
+        finally sc.clearJobGroup()
+      sc.setJobGroup(sentinel, "sentinel")
+      try sc.parallelize(Seq(1), 1).count()
+      finally sc.clearJobGroup()
+      assert(drained.await(60, java.util.concurrent.TimeUnit.SECONDS),
+        "listener bus did not deliver the sentinel job")
+      (result, seen.get)
+    } finally sc.removeSparkListener(listener)
+  }
+
   /** Run `body` with SQL confs set, restoring prior values after. */
   def withSQLConf[A](pairs: (String, String)*)(body: => A): A = {
     val prior = pairs.map { case (k, _) =>

@@ -848,4 +848,48 @@ class TsdbSpec extends SparkSuite {
     assert(rules.count(_ == graft.plans.SimplifyFoldedLabelLookup) == 1,
       rules.mkString(", "))
   }
+
+  /** Two series of metric `m` (`k` = a, b), one sample a minute. */
+  def twoSeries(from: Int, until: Int): DataFrame = {
+    import spark.implicits._
+    (from until until).flatMap(i => Seq("a", "b").map(k =>
+      ("m", Map("k" -> k), Start + i * 60L, i.toDouble)))
+      .toDF("metric", "labels", "ts", "value")
+  }
+
+  test("warm reads build their frames without a job") {
+    val path = tempDir("warm_reads")
+    val conf = TsdbConf(dataPath = path, segmentDuration = 7200L)
+    val t = new Tsdb(spark, conf)
+    // base (first batch), L0 twice, fold into L1 (cadence 2), L0 again
+    (0 until 4).foreach(b => t.insertRows(twoSeries(b * 30, b * 30 + 30)))
+    Seq("series_meta_base", "series_meta_folded", "series_meta").foreach {
+      l => assert(new java.io.File(s"$path/$l").isDirectory, l)
+    }
+    val (a, b) = (Start, Start + 119 * 60L)
+    def build(d: Tsdb): Seq[DataFrame] = Seq(
+      d.queryRange("m", Seq(LabelMatcher.eq("k", "a")), a, b),
+      d.queryRangeSelector(Seq(LabelMatcher.re("__name__", "m")), a, b),
+      d.querySeries(Seq(LabelMatcher.eq("k", "a")), a, b),
+      d.queryLabelValues("k", a, b))
+    // the warm-up read infers each tier's schema once
+    assert(build(t).map(_.count()) == Seq(120L, 240L, 1L, 2L))
+    assert(jobsDuring(build(t))._2 == 0)
+    // control: a fresh instance on the same store still reads footers
+    assert(jobsDuring(build(new Tsdb(spark, conf)))._2 > 0)
+  }
+
+  test("a layout mismatch fails loudly on every read, not as null labels") {
+    val path = tempDir("layout_mismatch")
+    new Tsdb(spark, TsdbConf(dataPath = path, segmentDuration = 7200L))
+      .insertRows(twoSeries(0, 30))
+    val wrong = new Tsdb(spark, TsdbConf(dataPath = path,
+      segmentDuration = 7200L, storeLabelsInFact = true))
+    (1 to 2).foreach { _ =>
+      val e = intercept[org.apache.spark.sql.AnalysisException](
+        wrong.queryRange("m", Seq.empty, Start, Start + 29 * 60L).collect())
+      assert(e.getMessage.contains("`metric`") ||
+        e.getMessage.contains("`labels`"), e.getMessage)
+    }
+  }
 }
